@@ -4,7 +4,7 @@ The reference pulls a zipped model from S3 per request and caches it on
 local disk (object_store_manager.py:9-17, predictor.py:20-35). On Spark
 there are exactly two idiomatic mechanisms, both wrapped here:
 
-- small lookup artifacts (gazetteers, label vocabularies, LM tables):
+- small lookup artifacts (gazetteers, LM tables):
   ``sc.broadcast`` — shipped once per executor, shared by all tasks.
 - file artifacts (model archives): ``sc.addFile`` + ``SparkFiles.get`` —
   Spark downloads once per NODE (its own torrent-style distribution), the
@@ -22,7 +22,6 @@ import zipfile
 from pyspark.sql import SparkSession
 
 from ..functions.tagger import FIRST_NAMES
-from ..functions.textref import LABELS
 
 
 def broadcast_gazetteer(spark: SparkSession, extra_names: set[str] | None = None):
@@ -30,10 +29,6 @@ def broadcast_gazetteer(spark: SparkSession, extra_names: set[str] | None = None
     ``bc.value`` — one copy per executor, never per task."""
     names = set(FIRST_NAMES) | {n.lower() for n in (extra_names or set())}
     return spark.sparkContext.broadcast(frozenset(names))
-
-
-def broadcast_label_vocab(spark: SparkSession):
-    return spark.sparkContext.broadcast(tuple(LABELS))
 
 
 def broadcast_arpa_lm(spark: SparkSession, arpa_path: str):

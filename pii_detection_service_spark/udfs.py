@@ -2,11 +2,17 @@
 
 The reference processes one document per HTTP request and reloads its model
 per request (ml_service_app.py:59-60, predictor.py:70). Here everything is
-batch-vectorized: Spark hands us Arrow record batches as pandas DataFrames
-(`mapInPandas`), the kernels in ``functions/`` run per batch, and all state
-(regexes, gazetteer, LM tables) is module-level — loaded once per executor
-process at import, the Spark-idiomatic replacement for the reference's
-model-cache-on-disk (predictor.py:30-35).
+batch-vectorized. The flagship stage (plans/stage.py) scores through the
+scalar struct ``pandas_udf`` from ``make_score_struct_udf``: Spark hands it
+the caption column of each Arrow record batch as a pandas Series and zips
+the returned struct back onto the row, so image bytes never cross into
+Python. ``make_score_iter`` is the ``mapInPandas`` form of the same kernel,
+for plans that need whole rows in Python. The kernels in ``functions/`` run
+per batch; regexes and builtin tables are module-level (loaded once per
+executor process at import), and swapped-in models (LM table, gazetteer,
+langid profiles) arrive as broadcast values passed down as arguments — the
+Spark-idiomatic replacement for the reference's model-cache-on-disk
+(predictor.py:30-35).
 
 Zero per-row Python at the Spark level; per-element work inside a batch is
 intrinsic to regex tagging (as it would be for fastText/KenLM C calls).
@@ -43,15 +49,6 @@ def score_batch(
     artifact (artifacts.broadcast_gazetteer); ``langid_model`` swaps the
     langid profiles for corpus-trained per-language tables
     (lmtrain.broadcast_trained_langid seam); None keeps the builtins."""
-    prev_gaz = tagger.set_gazetteer(gazetteer) if gazetteer is not None else None
-    try:
-        return _score_batch_inner(captions, lm_tbl, langid_model)
-    finally:
-        if prev_gaz is not None:
-            tagger.set_gazetteer(prev_gaz)
-
-
-def _score_batch_inner(captions: pd.Series, lm_tbl, langid_model=None) -> pd.DataFrame:
     caps = captions.fillna("")
     lp = caps.map(  # fused: one lower + one bigram encode
         lambda t: quality.lang_and_ppl(t, lm_tbl, langid_model)
@@ -62,7 +59,8 @@ def _score_batch_inner(captions: pd.Series, lm_tbl, langid_model=None) -> pd.Dat
         quality.keep_decision(c, l, p)
         for c, l, p in zip(caps, langs, ppls)
     ]
-    tagged = caps.map(tagger.tag_and_scrub)  # one tokenize+span pass per row
+    # one tokenize+span pass per row
+    tagged = [tagger.tag_and_scrub(c, gazetteer) for c in caps]
     return pd.DataFrame(
         {
             "lang": langs,
@@ -134,37 +132,15 @@ def predict_pipeline_batch(texts: pd.Series) -> pd.DataFrame:
     A1 decode → A2 tokenize → A12 tag → scrub. Emits the document-table
     shape columns (tokens, labels) plus scrubbed text."""
     decoded = texts.fillna("").map(textref.decode_escapes)
-    tagged = decoded.map(tagger.tag)
-    scrubbed = decoded.map(tagger.scrub)
+    tagged = [tagger.tag_and_scrub_pii(t) for t in decoded]  # one span pass per row
     return pd.DataFrame(
         {
             "full_text": decoded,
-            "tokens": [t for t, _ in tagged],
-            "labels": [l for _, l in tagged],
-            "scrubbed_text": [s for s, _ in scrubbed],
-            "n_pii": pd.Series([n for _, n in scrubbed], dtype="int32"),
+            "tokens": [t[0] for t in tagged],
+            "labels": [t[1] for t in tagged],
+            "scrubbed_text": [t[2] for t in tagged],
+            "n_pii": pd.Series([t[3] for t in tagged], dtype="int32"),
         },
         index=texts.index,
     )
 
-
-def decode_image_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Image decode + PSNR-vs-reencode invariant columns (test/verification
-    path; the decode itself is the pluggable-codec seam — imagecodec.py)."""
-    import numpy as np
-
-    from .sources import imagecodec
-
-    rows = []
-    for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-        try:
-            px = imagecodec.decode(bytes(data), fmt)
-            rows.append(
-                (int(px.shape[1]), int(px.shape[0]), float(np.mean(px)), True)
-            )
-        except Exception:
-            rows.append((0, 0, 0.0, False))
-    out = pd.DataFrame(
-        rows, columns=["dec_w", "dec_h", "mean_px", "decode_ok"], index=pdf.index
-    )
-    return out

@@ -43,8 +43,8 @@ def test_large_gazetteer_through_production_score_path(spark):
     """The ≥2×10⁴-name synthetic gazetteer flows through broadcast →
     make_score_struct_udf → tag_and_scrub: synthetic names get tagged as
     NAME_STUDENT and scrubbed, builtin behavior is preserved (superset),
-    and the module binding is restored after each batch (no state leak
-    into gazetteer-less callers)."""
+    and the module default is never rebound (no state leak into
+    gazetteer-less callers)."""
     import pyspark.sql.functions as F
 
     from pii_detection_service_spark import udfs
@@ -75,8 +75,8 @@ def test_large_gazetteer_through_production_score_path(spark):
     assert got[1]["n_pii"] == 1 and "[NAME_STUDENT]" in got[1]["scrubbed_caption"]
     assert got[2]["n_pii"] == 0 and got[2]["scrubbed_caption"] == rows[2][1]
 
-    # without the broadcast, the synthetic name is NOT tagged (binding
-    # restored; builtin golden behavior intact)
+    # without the broadcast, the synthetic name is NOT tagged (default
+    # untouched; builtin golden behavior intact)
     import pandas as pd
 
     plain = udfs.score_batch(pd.Series([rows[0][1]]))
